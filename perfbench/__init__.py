@@ -1,0 +1,1 @@
+"""tokencodec benchmark: see README.md in this directory."""
