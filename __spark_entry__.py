@@ -75,10 +75,7 @@ def _engine_root(spark: SparkSession, sf_dir: str) -> str:
         # no-op, a partially committed one (earlier crashed run) RESUMES
         # instead of being served half-decoded forever
         df = synth.token_table(spark, n_rows, seed=SEED)
-        # direct task-side write: the shipped fast path is what the
-        # oracle queries downstream verify
-        encode_job.encode(spark, df, root, commit_groups=2,
-                          direct_write=True)
+        encode_job.encode(spark, df, root, commit_groups=2)
         _ENGINE_CACHE[key] = root
     return root
 
@@ -191,8 +188,7 @@ def _docs_root(spark: SparkSession, sf_dir: str) -> str:
     if root not in _ENGINE_CACHE:
         # unconditional: no-op when complete, resume when partial
         encode_job.encode(spark, _docs_token_df(spark, sf_dir), root,
-                          commit_groups=2, max_chunk_tokens=64,
-                          direct_write=True)
+                          commit_groups=2, max_chunk_tokens=64)
         _ENGINE_CACHE[root] = root
     return root
 
@@ -370,7 +366,7 @@ def _upsert_root(spark: SparkSession, sf_dir: str) -> str:
         df = _docs_token_df(spark, sf_dir)
         num = F.substring("doc_id", 2, 9).cast("int")
         encode_job.encode(spark, df, root, commit_groups=2,
-                          max_chunk_tokens=64, direct_write=True)
+                          max_chunk_tokens=64)
         # per-op convergence (not one all-or-nothing guard): a crash
         # between any two lifecycle steps resumes from exactly the
         # missing step, since each is content-idempotent
@@ -484,8 +480,7 @@ def q_engine_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = root + "/compacted"
     if key not in _ENGINE_CACHE:
         encode_job.encode(spark, _docs_token_df(spark, sf_dir), root,
-                          commit_groups=2, max_chunk_tokens=48,
-                          direct_write=True)
+                          commit_groups=2, max_chunk_tokens=48)
         snap = SnapshotTable(root).current_snapshot()
         # idempotent across driver runs: a table this query compacted in
         # an earlier process has nothing left to merge
@@ -743,7 +738,7 @@ def _segment_bucket_expr(col, segments: list[tuple[int, int, int]],
     """Order-preserving bucket id over dense key segments: buckets are
     allocated to segments proportionally to their row mass, and within
     a segment the id is linear in the key — O(segments) WHEN branches
-    per row (segments are capped at 8), NOT O(buckets) comparisons (a
+    per row (segments are capped at 16), NOT O(buckets) comparisons (a
     flat sum of 100+ comparison terms measurably falls off the codegen
     cliff). Monotone in the key by construction: per-segment ranges are
     clamped into [base, base + nb - 1] and bases ascend."""
@@ -1078,13 +1073,13 @@ def _publish_root(spark: SparkSession, sf_dir: str) -> str:
         num = F.substring("doc_id", 2, 9).cast("bigint")
         if SnapshotTable(main).current_snapshot() is None:
             encode_job.encode(spark, df.filter(num % 3 == 1), main,
-                              commit_groups=1, direct_write=True)
+                              commit_groups=1)
         if not any(k.startswith("h")
                    for k in SnapshotTable(main).committed_groups()):
             staged_df = df.filter(num % 3 != 1)
             # encode() resumes a partially committed staging table
             encode_job.encode(spark, staged_df, stage, commit_groups=1,
-                              direct_write=True, group_prefix="h")
+                              group_prefix="h")
             # the AUDIT of write-audit-publish: isolation means a bad
             # batch is caught before any reader can see it
             if not decode_job.audit(staged_df,
@@ -1132,13 +1127,13 @@ def _branch_root(spark: SparkSession, sf_dir: str) -> str:
         tbl = SnapshotTable(root)
         if tbl.current_snapshot() is None:
             encode_job.encode(spark, df.filter(num % 3 == 1), root,
-                              commit_groups=1, direct_write=True)
+                              commit_groups=1)
         if not any(k.startswith("h") for k in tbl.committed_groups()):
             if not any(b["name"] == "wap" for b in tbl.branches()):
                 tbl.create_branch("wap")
             base_rows = decode_job.decode(spark, root).count()
             encode_job.encode(spark, df.filter(num % 3 != 1), root,
-                              commit_groups=1, direct_write=True,
+                              commit_groups=1,
                               group_prefix="h", branch="wap")
             # isolation: main must not see branch commits pre-publish
             if decode_job.decode(spark, root).count() != base_rows:
@@ -1186,7 +1181,7 @@ def _spill_root(spark: SparkSession, sf_dir: str) -> str:
     root = f"/tmp/tokencodec_entry/spill_v1_{_sfkey(sf_dir)}_n{n}"
     if root not in _ENGINE_CACHE:
         encode_job.encode(spark, _docs_token_df(spark, sf_dir), root,
-                          commit_groups=72, direct_write=True)
+                          commit_groups=72)
         _ENGINE_CACHE[root] = root
     return root
 
@@ -1234,8 +1229,7 @@ def _del_root(spark: SparkSession, sf_dir: str) -> str:
     root = f"/tmp/tokencodec_entry/docsdel_v1_{_sfkey(sf_dir)}_n{n}"
     if root not in _ENGINE_CACHE:
         encode_job.encode(spark, _docs_token_df(spark, sf_dir), root,
-                          commit_groups=1, max_chunk_tokens=64,
-                          direct_write=True)
+                          commit_groups=1, max_chunk_tokens=64)
         ids = (_docs_token_df(spark, sf_dir)
                .filter(F.substring("doc_id", 2, 18).cast("bigint") % 10 == 3)
                .select("doc_id"))
@@ -1296,7 +1290,7 @@ def _evo_root(spark: SparkSession, sf_dir: str) -> str:
         t = _docs_token_df(spark, sf_dir)
         num = F.substring("doc_id", 2, 18).cast("bigint")
         lang = F.concat(F.lit("L"), (num % 7).cast("string"))
-        kw = dict(commit_groups=1, max_chunk_tokens=64, direct_write=True)
+        kw = dict(commit_groups=1, max_chunk_tokens=64)
         encode_job.encode(spark, t.filter(num % 3 == 0), root, **kw)
         encode_job.encode(
             spark, (t.filter(num % 3 == 1).withColumn("lang", lang)
@@ -1658,7 +1652,7 @@ def q_rle_runs_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keys (the @Mx bench tables are id-shifted stripes with 10^12-wide
     # gaps) collapse a linear split over the global range into a few
     # hot buckets and the window serializes onto straggler tasks
-    # (guide §2.5 skew). Footer row-group stats merge into <= 8 dense
+    # (guide §2.5 skew). Footer row-group stats merge into <= 16 dense
     # segments (ONE for a uniformly keyed table — identical balance to
     # the old linear split); buckets are dealt to segments by row mass
     # and the id is linear within each, so the expression stays O(1)-ish
@@ -2203,7 +2197,7 @@ def _dedup_del_root(spark: SparkSession, sf_dir: str) -> str:
     root = f"/tmp/tokencodec_entry/dedupdel_v1_{_sfkey(sf_dir)}_n{n}"
     if root not in _ENGINE_CACHE:
         encode_job.encode(spark, _docs_token_df(spark, sf_dir), root,
-                          commit_groups=1, direct_write=True)
+                          commit_groups=1)
         if not any(is_delete_group(k)
                    for k in SnapshotTable(root).committed_groups()):
             nodes = (_t(spark, sf_dir, "documents")

@@ -22,7 +22,7 @@ def table(spark, tmp_path):
     root = str(tmp_path / "enc")
     df = synth.token_table(spark, 400, seed=91).cache()
     encode_job.encode(spark, df, root, commit_groups=2, n_salts=4,
-                      max_chunk_tokens=BUDGET, direct_write=True)
+                      max_chunk_tokens=BUDGET)
     return root, df
 
 

@@ -1,9 +1,10 @@
-"""Direct task-side parquet write (Iceberg's task-file / driver-manifest
-split): tasks write pages parquet with pyarrow and the driver commits
-the collected file list, instead of shipping page blobs back across the
-Arrow boundary for a JVM partitionBy write. These tests pin the
-contract: identical pages and metrics to the classic path, resume
-parity, exact-file manifests, orphan sweeping, and URI roots."""
+"""The page sink (encode_job.write_pages, Iceberg's task-file /
+driver-manifest split): tasks write pages parquet with pyarrow and the
+driver commits the collected file list, instead of shipping page blobs
+back across the Arrow boundary for a JVM partitionBy write. These tests
+pin the contract: identical pages and metrics to the sink's JVM
+fallback, resume parity, exact-file manifests, orphan sweeping, and URI
+roots."""
 
 import os
 
@@ -34,14 +35,26 @@ def _metrics(root):
             for s in SnapshotTable(root).snapshots()]
 
 
-def test_direct_matches_classic(spark, tmp_path):
+def test_direct_matches_classic(spark, tmp_path, monkeypatch):
+    """The JVM fallback (taken for Hadoop-only schemes, forced here)
+    writes the same chunks and commits the same metrics and file lists
+    as the task-side writer, for encode and for compact."""
+    from tokencodec.spark import maintenance
     df = synth.token_table(spark, N_ROWS, seed=SEED)
     classic = str(tmp_path / "classic")
     direct = str(tmp_path / "direct")
-    encode_job.encode(spark, df, classic, commit_groups=2,
-                      max_chunk_tokens=1 << 17)
-    encode_job.encode(spark, df, direct, commit_groups=2,
-                      max_chunk_tokens=1 << 17, direct_write=True)
+    for root in (direct, classic):
+        if root == classic:
+            monkeypatch.setattr(encode_job, "direct_write_supported",
+                                lambda path: False)
+        encode_job.encode(spark, df, root, commit_groups=2,
+                          max_chunk_tokens=1 << 12)
+        snap = maintenance.compact(spark, root, max_chunk_tokens=1 << 17)
+        assert snap["metrics"]["op"] == "compact"
+        assert snap["metrics"]["compacted_chunks"] > 0
+        paths = SnapshotTable(root).data_paths()
+        assert paths and all(os.path.isfile(p) and p.endswith(".parquet")
+                             for p in paths)
     assert _fingerprint(spark, classic) == _fingerprint(spark, direct)
     assert _metrics(classic) == _metrics(direct)
 
@@ -50,7 +63,7 @@ def test_manifest_lists_exact_files(spark, tmp_path):
     df = synth.token_table(spark, N_ROWS, seed=SEED)
     root = str(tmp_path / "t")
     encode_job.encode(spark, df, root, commit_groups=2,
-                      max_chunk_tokens=1 << 17, direct_write=True)
+                      max_chunk_tokens=1 << 17)
     tbl = SnapshotTable(root)
     committed = set(tbl.data_paths())
     assert committed, "direct write committed no files"
@@ -69,7 +82,7 @@ def test_direct_resume_after_partial_commit(spark, tmp_path, monkeypatch):
     root_a = str(tmp_path / "partial")
     root_b = str(tmp_path / "full")
     encode_job.encode(spark, df, root_b, commit_groups=2,
-                      max_chunk_tokens=1 << 17, direct_write=True)
+                      max_chunk_tokens=1 << 17)
 
     real_commit = SnapshotTable.commit
     calls = {"n": 0}
@@ -84,11 +97,11 @@ def test_direct_resume_after_partial_commit(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(SnapshotTable, "commit", dying_commit)
     with pytest.raises(RuntimeError, match="injected"):
         encode_job.encode(spark, df, root_a, commit_groups=2,
-                          max_chunk_tokens=1 << 17, direct_write=True)
+                          max_chunk_tokens=1 << 17)
     monkeypatch.setattr(SnapshotTable, "commit", real_commit)
 
     encode_job.encode(spark, df, root_a, commit_groups=2,
-                      max_chunk_tokens=1 << 17, direct_write=True)
+                      max_chunk_tokens=1 << 17)
     assert _fingerprint(spark, root_a) == _fingerprint(spark, root_b)
 
 
@@ -111,7 +124,7 @@ def test_orphan_sweep(tmp_path):
 def test_direct_write_empty_source(spark, tmp_path):
     df = synth.token_table(spark, 10, seed=SEED).filter("n_tok < 0")
     root = str(tmp_path / "empty")
-    encode_job.encode(spark, df, root, commit_groups=2, direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=2)
     pages = encode_job.read_pages(spark, root)
     assert pages.count() == 0
     snap = SnapshotTable(root).current_snapshot()
@@ -123,8 +136,8 @@ def test_direct_write_file_uri_root(spark, tmp_path):
     df = synth.token_table(spark, N_ROWS, seed=SEED)
     plain = str(tmp_path / "plain")
     uri = "file://" + str(tmp_path / "uri")
-    encode_job.encode(spark, df, plain, commit_groups=1, direct_write=True)
-    encode_job.encode(spark, df, uri, commit_groups=1, direct_write=True)
+    encode_job.encode(spark, df, plain, commit_groups=1)
+    encode_job.encode(spark, df, uri, commit_groups=1)
     assert _fingerprint(spark, plain) == _fingerprint(spark, uri)
 
 
@@ -152,7 +165,7 @@ def test_table_totals_chain(spark, tmp_path):
     df = synth.token_table(spark, N_ROWS, seed=SEED)
     root = str(tmp_path / "t")
     encode_job.encode(spark, df, root, commit_groups=2,
-                      max_chunk_tokens=1 << 17, direct_write=True)
+                      max_chunk_tokens=1 << 17)
     from tokencodec.spark import streaming
     src2 = str(tmp_path / "more")
     synth.token_table(spark, 100, seed=SEED + 1).write.parquet(src2)
@@ -177,7 +190,7 @@ def test_cli_describe(spark, tmp_path, capsys):
 
     df = synth.token_table(spark, 200, seed=SEED)
     root = str(tmp_path / "t")
-    encode_job.encode(spark, df, root, commit_groups=2, direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=2)
     assert cli_main(["describe", root]) == 0
     out = _json.loads(capsys.readouterr().out.strip())
     assert out["groups"] == ["g0", "g1"]

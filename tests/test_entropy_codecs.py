@@ -197,6 +197,23 @@ def test_dict_basepacked_indices_roundtrip_and_density():
     assert len(page) * 8 / len(v) < 7.8
 
 
+def test_dict_unique_inverse_sorts_small_wide_pages(monkeypatch):
+    """A small page spanning a wide range takes the sort path instead of
+    allocating O(range) bincount bins; outputs equal np.unique's."""
+    from tokencodec.codecs import dictionary
+    v = np.array([7, 1 << 21, 3, 7, 900_000, 3, 12, 1 << 21, 5, 7],
+                 dtype=np.int64)
+    want = np.unique(v, return_inverse=True)
+
+    def no_bincount(*a, **k):
+        raise AssertionError("bincount path taken for a 10-value page")
+
+    monkeypatch.setattr(np, "bincount", no_bincount)
+    got = dictionary._unique_inverse(v)
+    np.testing.assert_array_equal(got[0], want[0])
+    np.testing.assert_array_equal(got[1], want[1])
+
+
 @settings(max_examples=40, deadline=None)
 @given(st.integers(0, 2 ** 32))
 def test_grouped_mixed_profile_property(seed):

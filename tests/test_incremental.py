@@ -51,7 +51,7 @@ def test_changes_skip_compaction_rewrites(spark, tmp_path):
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 150, seed=13)
     encode_job.encode(spark, df, root, commit_groups=2,
-                      max_chunk_tokens=2000, direct_write=True)
+                      max_chunk_tokens=2000)
     tbl = SnapshotTable(root)
     sid_mid = tbl.chain()[0]["snapshot_id"]  # after first commit group
     pre_compact = tbl.current_snapshot()["snapshot_id"]
@@ -70,7 +70,7 @@ def test_changes_skip_compaction_rewrites(spark, tmp_path):
 def test_changes_since_expired_snapshot_refuses(spark, tmp_path):
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 80, seed=14)
-    encode_job.encode(spark, df, root, commit_groups=2, direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=2)
     first = SnapshotTable(root).chain()[0]["snapshot_id"]
     maintenance.expire_snapshots(root, keep_last=1)
     with pytest.raises(ValueError, match="retained chain"):
@@ -106,15 +106,13 @@ def test_consumer_cursor_full_lifecycle(spark, tmp_path):
         return until
 
     # bootstrap: first batch + initial full read
-    encode_job.encode(spark, batches[0], root, commit_groups=1, n_salts=4,
-                      direct_write=True, max_chunk_tokens=512)
+    encode_job.encode(spark, batches[0], root, commit_groups=1, n_salts=4, max_chunk_tokens=512)
     cursor = cur_sid()
     seen.extend(r[0] for r in decode_job.decode(
         spark, root, columns=["doc_id"]).collect())
 
     # append -> consume
-    encode_job.encode(spark, batches[1], root, commit_groups=1, n_salts=4,
-                      direct_write=True, max_chunk_tokens=512,
+    encode_job.encode(spark, batches[1], root, commit_groups=1, n_salts=4, max_chunk_tokens=512,
                       group_prefix="b1g")
     cursor = consume(cursor)
 
@@ -130,8 +128,7 @@ def test_consumer_cursor_full_lifecycle(spark, tmp_path):
     assert len(seen) == n_before
 
     # append again -> consume
-    encode_job.encode(spark, batches[2], root, commit_groups=1, n_salts=4,
-                      direct_write=True, max_chunk_tokens=512,
+    encode_job.encode(spark, batches[2], root, commit_groups=1, n_salts=4, max_chunk_tokens=512,
                       group_prefix="b2g")
     cursor = consume(cursor)
 

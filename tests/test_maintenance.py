@@ -299,8 +299,14 @@ def test_expire_mixed_dir_and_file_commits_keeps_live_data(spark, tmp_path):
     sibling run dir (regression test for exactly that)."""
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 300, seed=21)
-    # classic write commits the run DIRECTORY (legacy granularity)
-    encode_job.encode(spark, df, root, commit_groups=1, max_chunk_tokens=2000)
+    # a legacy commit: the run DIRECTORY is the committed data path
+    scratch = str(tmp_path / "scratch")
+    encode_job.encode(spark, df, scratch, commit_groups=1, max_chunk_tokens=2000)
+    tbl = SnapshotTable(root)
+    run_dir = tbl.new_run_dir()
+    encode_job.read_pages(spark, scratch).write.parquet(run_dir)
+    tbl.commit({"g0": [run_dir]},
+               metrics=SnapshotTable(scratch).current_snapshot()["metrics"])
     assert any(SnapshotTable(root).fs.isdir(p)
                for p in SnapshotTable(root).data_paths())
     # file-granular rewrite supersedes it
@@ -323,7 +329,7 @@ def test_remove_orphan_files(spark, tmp_path):
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 200, seed=7)
     encode_job.encode(spark, df, root, commit_groups=1,
-                      max_chunk_tokens=2000, direct_write=True)
+                      max_chunk_tokens=2000)
     data = os.path.join(root, "data")
     live_dirs = set(os.listdir(data))
 
@@ -351,7 +357,8 @@ def test_remove_orphan_files(spark, tmp_path):
 
 def test_direct_write_probe():
     """URI capability probe: plain paths and pyarrow-resolvable URIs
-    pass; Hadoop-only spellings fall back to the classic JVM write."""
+    pass; Hadoop-only spellings fall back to the page sink's JVM
+    writer."""
     assert encode_job.direct_write_supported("/tmp/x")
     assert encode_job.direct_write_supported("file:///tmp/x")
     assert not encode_job.direct_write_supported("s3a://bucket/x")

@@ -103,7 +103,9 @@ def test_snapshot_table_lifecycle_on_object_store(tmp_path):
 
 def test_commit_race_on_object_store_both_land(tmp_path):
     """Two concurrent committers, exactly one wins each id, the loser
-    rebases — no lost update, over conditional PUTs only."""
+    rebases — no lost update, over conditional PUTs only. The chain's
+    cumulative totals are derived against the parent each commit lands
+    on, so the loser's rebase still sums both committers' deltas."""
     base = str(tmp_path / "store")
     barrier = threading.Barrier(2)
     fired = []
@@ -119,11 +121,17 @@ def test_commit_race_on_object_store_both_land(tmp_path):
                 pass
 
     results = {}
+    deltas = {"ga": {"n_chunks": 1, "n_rows": 10, "n_tokens": 100,
+                     "enc_bytes": 1000, "max_doc_parts": 1},
+              "gb": {"n_chunks": 2, "n_rows": 20, "n_tokens": 200,
+                     "enc_bytes": 2000, "max_doc_parts": 3}}
 
     def committer(name):
         fs = ObjectStoreFS("s3://bkt", DirObjectStore(base, before_put=hook))
         tbl = SnapshotTable(ROOT, fs=fs)
-        results[name] = tbl.commit({name: []}, metrics={})
+        results[name] = tbl.commit(
+            {name: [f"{ROOT}/data/run-{name}/f.parquet"]},
+            metrics=deltas[name])
 
     ts = [threading.Thread(target=committer, args=(n,)) for n in ("ga", "gb")]
     for t in ts:
@@ -136,6 +144,46 @@ def test_commit_race_on_object_store_both_land(tmp_path):
     assert "ga" in final["groups"] and "gb" in final["groups"]
     ids = sorted(r["snapshot_id"] for r in results.values())
     assert ids == [0, 1]
+    assert final["metrics"]["table_totals"] == {
+        "n_chunks": 3, "n_rows": 30, "n_tokens": 300, "enc_bytes": 3000}
+    assert final["metrics"]["max_doc_parts_chain"] == 3
+
+
+class _LostFirstResponse(DirObjectStore):
+    """The first conditional PUT lands, but its response is lost: the
+    client's retry of it then fails the If-None-Match precondition."""
+
+    def __init__(self, base):
+        super().__init__(base)
+        self.lost = False
+
+    def put(self, key, data, if_none_match=False):
+        super().put(key, data, if_none_match)
+        if if_none_match and not self.lost:
+            self.lost = True
+            raise PreconditionFailed(key)
+
+
+def test_tag_and_branch_creation_survive_lost_response(tmp_path):
+    """A create_tag / create_branch whose own PUT landed before the
+    retry hit the precondition succeeds (the occupant IS the ref being
+    written), while a genuine second creator still sees a conflict."""
+    base = str(tmp_path / "store")
+    SnapshotTable(ROOT, fs=ObjectStoreFS("s3://bkt", DirObjectStore(base))) \
+        .commit({"g0": []}, metrics={})
+    made = {}
+    for create in ("create_tag", "create_branch"):
+        tbl = SnapshotTable(ROOT, fs=ObjectStoreFS(
+            "s3://bkt", _LostFirstResponse(base)))
+        made[create] = getattr(tbl, create)("v1")
+        assert tbl.fs.client.lost
+        with pytest.raises(ValueError, match="already exists"):
+            getattr(tbl, create)("v1")
+    assert tbl.tag("v1") == made["create_tag"]
+    assert tbl.tag("v1")["snapshot_id"] == 0
+    assert [b["name"] for b in tbl.branches()] == ["v1"]
+    br = SnapshotTable(ROOT, fs=tbl.fs, branch="v1")
+    assert br.current_snapshot()["groups"] == {"g0": []}
 
 
 def test_expire_and_orphans_on_object_store(tmp_path):

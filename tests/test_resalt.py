@@ -27,7 +27,7 @@ def table(spark, tmp_path):
     root = str(tmp_path / "enc")
     df = synth.token_table(spark, 300, seed=77).cache()
     encode_job.encode(spark, df, root, commit_groups=2, n_salts=4,
-                      max_chunk_tokens=4096, direct_write=True)
+                      max_chunk_tokens=4096)
     return root, df
 
 
@@ -105,9 +105,9 @@ def test_append_adopts_and_guards_chain_n_salts(spark, table, tmp_path):
         "doc_id", F.concat(F.lit("x"), "doc_id"))
     with pytest.raises(ValueError, match="resalt"):
         encode_job.encode(spark, more, root, commit_groups=1, n_salts=8,
-                          group_prefix="b", direct_write=True)
+                          group_prefix="b")
     encode_job.encode(spark, more, root, commit_groups=1,
-                      group_prefix="b", direct_write=True)  # adopts 4
+                      group_prefix="b")  # adopts 4
     out = decode_job.decode(spark, root)
     assert decode_job.audit(df.unionByName(more), out) == {
         "missing": 0, "extra": 0, "ok": True}
@@ -116,7 +116,7 @@ def test_append_adopts_and_guards_chain_n_salts(spark, table, tmp_path):
     more2 = synth.token_table(spark, 20, seed=101).withColumn(
         "doc_id", F.concat(F.lit("y"), "doc_id"))
     encode_job.encode(spark, more2, root, commit_groups=1,
-                      group_prefix="c", direct_write=True)
+                      group_prefix="c")
     sch = decode_job._scheme_from_manifest(root, None)
     assert sch["n_salts"] == 16
     out2 = decode_job.decode(spark, root)

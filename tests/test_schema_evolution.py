@@ -32,8 +32,7 @@ def _with_extras(df, lang=True, score="int"):
 def test_extras_roundtrip_single_commit(spark, tmp_path):
     root = str(tmp_path / "enc")
     df = _with_extras(synth.token_table(spark, 200, seed=61)).cache()
-    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4,
-                      direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4)
     assert table_extra_schema(root) == {"lang": "string", "score": "int"}
     out = decode_job.decode(spark, root)
     assert set(out.columns) == {"doc_id", "tokens", "n_tok", "source",
@@ -58,10 +57,8 @@ def test_add_column_null_backfill(spark, tmp_path):
     base = synth.token_table(spark, 300, seed=62).cache()
     half1 = base.filter(F.crc32("doc_id") % 2 == 0)
     half2 = _with_extras(base.filter(F.crc32("doc_id") % 2 == 1))
-    encode_job.encode(spark, half1, root, commit_groups=1, n_salts=4,
-                      direct_write=True)
-    encode_job.encode(spark, half2, root, commit_groups=1, n_salts=4,
-                      direct_write=True, group_prefix="v2g")
+    encode_job.encode(spark, half1, root, commit_groups=1, n_salts=4)
+    encode_job.encode(spark, half2, root, commit_groups=1, n_salts=4, group_prefix="v2g")
     assert table_extra_schema(root) == {"lang": "string", "score": "int"}
     out = decode_job.decode(spark, root).cache()
     assert out.count() == base.count()
@@ -86,12 +83,9 @@ def test_int_to_bigint_widening(spark, tmp_path):
     a = base.filter(third == 0)                       # no extras
     b = _with_extras(base.filter(third == 1))          # score int
     c = _with_extras(base.filter(third == 2), score="bigint")  # > int32
-    encode_job.encode(spark, a, root, commit_groups=1, n_salts=4,
-                      direct_write=True)
-    encode_job.encode(spark, b, root, commit_groups=1, n_salts=4,
-                      direct_write=True, group_prefix="v2g")
-    encode_job.encode(spark, c, root, commit_groups=1, n_salts=4,
-                      direct_write=True, group_prefix="v3g")
+    encode_job.encode(spark, a, root, commit_groups=1, n_salts=4)
+    encode_job.encode(spark, b, root, commit_groups=1, n_salts=4, group_prefix="v2g")
+    encode_job.encode(spark, c, root, commit_groups=1, n_salts=4, group_prefix="v3g")
     assert table_extra_schema(root)["score"] == "bigint"
     out = decode_job.decode(spark, root).cache()
     assert dict(out.dtypes)["score"] == "bigint"
@@ -110,12 +104,12 @@ def test_incompatible_evolution_refused(spark, tmp_path):
     root = str(tmp_path / "enc")
     base = synth.token_table(spark, 60, seed=64).cache()
     encode_job.encode(spark, base.withColumn("v", F.lit("s")), root,
-                      commit_groups=1, n_salts=2, direct_write=True)
+                      commit_groups=1, n_salts=2)
     # an incompatible redefinition is refused AT WRITE TIME (the commit
     # path merges the chain schema and fails before publishing)
     with pytest.raises(ValueError, match="incompatible schema evolution"):
         encode_job.encode(spark, base.withColumn("v", F.lit(1)), root,
-                          commit_groups=1, n_salts=2, direct_write=True,
+                          commit_groups=1, n_salts=2,
                           group_prefix="v2g")
     assert table_extra_schema(root) == {"v": "string"}
     with pytest.raises(ValueError, match="int -> bigint"):
@@ -136,7 +130,7 @@ def test_split_docs_carry_extras(spark, tmp_path):
     root = str(tmp_path / "enc")
     df = _with_extras(synth.token_table(spark, 200, seed=66)).cache()
     encode_job.encode(spark, df, root, commit_groups=1, n_salts=4,
-                      max_chunk_tokens=2048, direct_write=True)
+                      max_chunk_tokens=2048)
     pages = encode_job.read_pages(spark, root)
     assert pages.filter(F.col("doc_parts") > 1).count() > 0
     out = decode_job.decode(spark, root)
@@ -146,8 +140,7 @@ def test_split_docs_carry_extras(spark, tmp_path):
 def test_purge_preserves_extras(spark, tmp_path):
     root = str(tmp_path / "enc")
     df = _with_extras(synth.token_table(spark, 200, seed=67)).cache()
-    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4,
-                      direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4)
     doomed = [r[0] for r in df.select("doc_id").orderBy("doc_id")
               .limit(5).collect()]
     maintenance.delete_docs(spark, root, doomed)
@@ -167,7 +160,7 @@ def test_compact_merges_extras(spark, tmp_path):
     root = str(tmp_path / "enc")
     df = _with_extras(synth.token_table(spark, 200, seed=68)).cache()
     encode_job.encode(spark, df, root, commit_groups=1, n_salts=4,
-                      max_chunk_tokens=512, direct_write=True)
+                      max_chunk_tokens=512)
     before = encode_job.read_pages(spark, root).count()
     snap = maintenance.compact(spark, root, max_chunk_tokens=4096)
     after = encode_job.read_pages(spark, root).count()
@@ -190,9 +183,9 @@ def test_compact_merges_mixed_era_chunks(spark, tmp_path):
     half1 = base.filter(F.crc32("doc_id") % 2 == 0).cache()
     half2 = _with_extras(base.filter(F.crc32("doc_id") % 2 == 1)).cache()
     encode_job.encode(spark, half1, root, commit_groups=1, n_salts=2,
-                      max_chunk_tokens=2048, direct_write=True)
+                      max_chunk_tokens=2048)
     encode_job.encode(spark, half2, root, commit_groups=1, n_salts=2,
-                      max_chunk_tokens=2048, direct_write=True,
+                      max_chunk_tokens=2048,
                       group_prefix="v2g")
     pre = decode_job.decode(spark, root).cache()
     pre_rows = pre.collect()
@@ -229,8 +222,7 @@ def test_nullable_extras_roundtrip(spark, tmp_path):
                                       (F.col("n_tok") * 3).cast("int")))
           .cache())
     assert df.filter(F.col("lang").isNull()).count() > 0
-    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4,
-                      direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4)
     out = decode_job.decode(spark, root)
     assert decode_job.audit(df, out, strict=True) == {
         "missing": 0, "extra": 0, "ok": True}
@@ -258,8 +250,7 @@ def test_streaming_commit_keeps_extra_chain(spark, tmp_path):
     from tokencodec.spark.table import SnapshotTable
     root = str(tmp_path / "enc")
     df = _with_extras(synth.token_table(spark, 80, seed=72)).cache()
-    encode_job.encode(spark, df, root, commit_groups=1, n_salts=2,
-                      direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=1, n_salts=2)
     src = str(tmp_path / "stream_src")
     (synth.token_table(spark, 40, seed=73)
      .write.mode("overwrite").parquet(src))
@@ -287,8 +278,7 @@ def test_float_double_extras_roundtrip(spark, tmp_path):
                                      .cast("float")))
           .cache())
     assert df.filter(F.col("conf").isNull()).count() > 0
-    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4,
-                      direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4)
     assert table_extra_schema(root) == {"quality": "double", "conf": "float"}
     out = decode_job.decode(spark, root)
     assert dict(out.dtypes)["quality"] == "double"
@@ -321,9 +311,9 @@ def test_float_to_double_widening(spark, tmp_path):
     half2 = (base.filter(F.crc32("doc_id") % 2 == 1)
              .withColumn("conf", F.col("n_tok") / F.lit(7.0) + 1e-12)).cache()
     encode_job.encode(spark, half1, root, commit_groups=1, n_salts=2,
-                      max_chunk_tokens=2048, direct_write=True)
+                      max_chunk_tokens=2048)
     encode_job.encode(spark, half2, root, commit_groups=1, n_salts=2,
-                      max_chunk_tokens=2048, direct_write=True,
+                      max_chunk_tokens=2048,
                       group_prefix="v2g")
     assert table_extra_schema(root) == {"conf": "double"}
     out = decode_job.decode(spark, root).cache()
@@ -350,8 +340,7 @@ def test_fsck_validates_extra_pages(spark, tmp_path):
     count into the chunk metrics) and CRC-checks each extra page."""
     root = str(tmp_path / "enc")
     df = _with_extras(synth.token_table(spark, 150, seed=69)).cache()
-    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4,
-                      direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4)
     from pyspark.sql import functions as F
 
     from tokencodec.spark import fsck

@@ -42,7 +42,7 @@ def test_random_program_matches_reference_model(spark, tmp_path, seed):
     # initial table: 40 docs
     model = {d: _tokens(rng) for d in all_ids[:40]}
     encode_job.encode(spark, _df(spark, model), root, commit_groups=1,
-                      n_salts=4, max_chunk_tokens=BUDGET, direct_write=True)
+                      n_salts=4, max_chunk_tokens=BUDGET)
     ever_deleted: set = set()
 
     def check(step, op):
@@ -64,7 +64,7 @@ def test_random_program_matches_reference_model(spark, tmp_path, seed):
             add = {d: _tokens(rng) for d in batch}
             encode_job.encode(spark, _df(spark, add), root,
                               commit_groups=1, group_prefix=f"a{step}x",
-                              max_chunk_tokens=BUDGET, direct_write=True)
+                              max_chunk_tokens=BUDGET)
             model.update(add)
         elif op == "delete" and visible:
             batch = rng.sample(visible, min(len(visible),
@@ -110,8 +110,7 @@ def test_random_program_matches_reference_model(spark, tmp_path, seed):
     check("tail-ups", "upsert-revive")
     add = {b: _tokens(rng)}
     encode_job.encode(spark, _df(spark, add), root, commit_groups=1,
-                      group_prefix="tailx", max_chunk_tokens=BUDGET,
-                      direct_write=True)
+                      group_prefix="tailx", max_chunk_tokens=BUDGET)
     model.update(add)
     check("tail-app", "append-revive")
     assert ever_deleted is not None  # program bookkeeping intact
@@ -129,7 +128,7 @@ def test_random_branched_program_matches_dual_models(spark, tmp_path, seed):
     all_ids = [f"doc-{i:06d}" for i in range(50)]
     main = {d: _tokens(rng) for d in all_ids[:35]}
     encode_job.encode(spark, _df(spark, main), root, commit_groups=1,
-                      n_salts=4, max_chunk_tokens=BUDGET, direct_write=True)
+                      n_salts=4, max_chunk_tokens=BUDGET)
     # a couple of deletes/upserts BEFORE the fork so the fork carries
     # live attribution
     pre = sorted(main)[:4]
@@ -164,7 +163,7 @@ def test_random_branched_program_matches_dual_models(spark, tmp_path, seed):
             encode_job.encode(spark, _df(spark, add), root,
                               commit_groups=1,
                               group_prefix=f"s{step}{br or 'm'}x",
-                              max_chunk_tokens=BUDGET, direct_write=True,
+                              max_chunk_tokens=BUDGET,
                               branch=br)
             model.update(add)
         elif op == "delete" and visible:

@@ -56,7 +56,7 @@ def test_roll_forward_sees_unswapped_commit(spark, tmp_path):
     the current snapshot (readers roll forward past the stale hint)."""
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 100, seed=4)
-    encode_job.encode(spark, df, root, commit_groups=1, direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=1)
     sid, _ = _plant_unswapped_commit(root)
 
     cur = SnapshotTable(root).current_snapshot()
@@ -71,7 +71,7 @@ def test_commit_rebases_onto_unswapped_commit(spark, tmp_path):
     parent, keeping its groups."""
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 100, seed=4)
-    encode_job.encode(spark, df, root, commit_groups=1, direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=1)
     sid, _ = _plant_unswapped_commit(root)
 
     tbl = SnapshotTable(root)
@@ -90,7 +90,7 @@ def test_concurrent_commit_loser_rebases_no_lost_update(spark, tmp_path):
     hint-write ordering."""
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 60, seed=7)
-    encode_job.encode(spark, df, root, commit_groups=1, direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=1)
 
     class RacingFS(LocalFS):
         """First create_excl call loses: B commits at that exact point
@@ -120,7 +120,7 @@ def test_current_recovers_without_hint(spark, tmp_path):
     full table erasure)."""
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 100, seed=4)
-    encode_job.encode(spark, df, root, commit_groups=2, direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=2)
     before = SnapshotTable(root).current_snapshot()["snapshot_id"]
     os.remove(os.path.join(root, "_manifest", "CURRENT"))
 
@@ -162,7 +162,7 @@ def test_expire_ignores_legacy_claim(spark, tmp_path):
     data)."""
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 200, seed=3)
-    encode_job.encode(spark, df, root, commit_groups=2, direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=2)
     _plant_legacy_claim(root)
 
     maintenance.expire_snapshots(root, keep_last=1)
@@ -176,7 +176,7 @@ def test_remove_orphans_ages_out_legacy_claims(spark, tmp_path):
 
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 100, seed=4)
-    encode_job.encode(spark, df, root, commit_groups=1, direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=1)
     _, claim_path = _plant_legacy_claim(root)
 
     res = maintenance.remove_orphan_files(root, older_than_hours=24)
@@ -198,7 +198,7 @@ def test_split_doc_planning_survives_expiry(spark, tmp_path):
     # commit 0+1: tiny budget forces doc splits (doc_parts > 1)
     df = synth.token_table(spark, 120, seed=5)
     encode_job.encode(spark, df, root, commit_groups=2,
-                      max_chunk_tokens=64, direct_write=True)
+                      max_chunk_tokens=64)
     assert encode_job.read_pages(spark, root).filter("doc_parts > 1").count() > 0
     # later commit with no splits
     from tokencodec.spark import streaming
@@ -239,7 +239,7 @@ def test_legacy_stale_parent_claim_does_not_shadow_commit(spark, tmp_path):
 
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 100, seed=4)
-    encode_job.encode(spark, df, root, commit_groups=2, direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=2)
     tbl = SnapshotTable(root)
     cur = tbl.current_snapshot()
     sid = cur["snapshot_id"] + 1
@@ -277,7 +277,7 @@ def test_torn_claim_ages_out_and_commit_recovers(spark, tmp_path):
 
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 60, seed=8)
-    encode_job.encode(spark, df, root, commit_groups=1, direct_write=True)
+    encode_job.encode(spark, df, root, commit_groups=1)
     tbl = SnapshotTable(root)
     sid = tbl.current_snapshot()["snapshot_id"] + 1
     torn_path = os.path.join(root, "_manifest", f"snapshot-{sid:06d}.json")

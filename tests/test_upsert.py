@@ -31,7 +31,7 @@ def table(spark, tmp_path):
     root = str(tmp_path / "enc")
     df = synth.token_table(spark, 400, seed=91).cache()
     encode_job.encode(spark, df, root, commit_groups=2, n_salts=4,
-                      max_chunk_tokens=BUDGET, direct_write=True)
+                      max_chunk_tokens=BUDGET)
     return root, df
 
 
@@ -154,7 +154,7 @@ def test_legacy_chain_keeps_global_masking(spark, table):
     # re-add via a plain append (what a legacy-era operator would do)
     encode_job.encode(spark, df.filter(F.col("doc_id").isin(gone)), root,
                       commit_groups=1, n_salts=4, group_prefix="readd",
-                      max_chunk_tokens=BUDGET, direct_write=True)
+                      max_chunk_tokens=BUDGET)
     tbl = SnapshotTable(root)
     # strip attribution: legacy manifests never recorded new_groups
     for name in tbl.fs.listdir(tbl.manifest_dir):
@@ -240,7 +240,7 @@ def test_compact_after_upsert_keeps_replacements(spark, tmp_path):
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 300, seed=23).cache()
     encode_job.encode(spark, df, root, commit_groups=1, n_salts=4,
-                      max_chunk_tokens=2000, direct_write=True)
+                      max_chunk_tokens=2000)
     targets = _targets(df, 6)
     rep = (df.filter(F.col("doc_id").isin(targets))
            .withColumn("tokens", F.reverse("tokens")))

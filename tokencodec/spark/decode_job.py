@@ -579,8 +579,8 @@ def _attach_data_seq(spark: SparkSession, pages: DataFrame,
                      path_seqs: dict) -> DataFrame:
     """Stamp each chunk row with its group's first-commit seq
     (``data_seq``). Committed paths come in two granularities — exact
-    .parquet files (direct-write / purge commits) and run DIRECTORIES
-    (classic JVM-write commits, upserts) — so the scheme-normalized
+    .parquet files (every page-sink commit) and run DIRECTORIES (tables
+    written by older engine versions) — so the scheme-normalized
     ``_metadata.file_path`` is matched exactly first, then by its
     parent directory. Unmatched files default to _ANCIENT_SEQ ("ancient",
     masked by every delete — correct, the map covers everything at or

@@ -4,8 +4,9 @@ snapshot commits.
 Pipeline (SURVEY.md §3 "our engine's lifecycle"):
   source df -> add (bucket, salt) [no shuffle] -> hash repartition on
   (bucket, salt) [the ONLY shuffle] -> sortWithinPartitions ->
-  mapInArrow vectorized encode [JVM->Python Arrow boundary] -> parquet
-  write into a run dir -> snapshot commit [atomic manifest rename].
+  mapInArrow vectorized encode + task-side parquet write into a run dir
+  [JVM->Python Arrow boundary] -> snapshot commit of the file list
+  [atomic manifest create].
 
 Buckets are split into ``commit_groups`` groups (bucket % groups), each
 written+committed separately, so a killed job resumes from the last
@@ -34,7 +35,8 @@ from pyspark.sql import functions as F
 
 from tokencodec import bloom, codecs, pageformat
 from tokencodec.spark import partition as part
-from tokencodec.spark.table import SnapshotTable
+from tokencodec.spark.table import (SnapshotTable, is_delete_group,
+                                     merge_extra_schema)
 
 # Appended columns must go LAST: read_pages uses this DDL as the
 # explicit read schema, so files written by older engine versions
@@ -174,9 +176,9 @@ def _encode_chunk(bucket: int, salt: int, seq: int,
 
 
 # Arrow analog of PAGES_DDL: _rows_to_batch builds batches with it and
-# the direct writer stamps it on task-written parquet files, so classic
-# (JVM-written) and direct (pyarrow-written) tables read identically
-# under read_pages' explicit schema.
+# write_pages stamps it on task-written parquet files, so pyarrow- and
+# JVM-written files (the sink's fallback, older tables) read
+# identically under read_pages' explicit schema.
 _PAGES_TYPES = {
     "bucket": pa.int32(), "salt": pa.int32(), "chunk_seq": pa.int32(),
     "chunk_uid": pa.string(), "n_rows": pa.int32(), "n_tokens": pa.int64(),
@@ -378,64 +380,6 @@ def make_encoder(max_chunk_tokens: int = part.MAX_CHUNK_TOKENS,
     return encode_batches
 
 
-_TOTAL_KEYS = ("n_chunks", "n_rows", "n_tokens", "enc_bytes")
-
-
-def next_table_totals(parent: dict | None, delta: dict) -> dict | None:
-    """Cumulative whole-table metrics carried in every snapshot's
-    ``metrics.table_totals`` so maintenance never needs a table scan to
-    know table size. None when the chain predates the field (resuming a
-    legacy table) — consumers then fall back to aggregating. Advisory
-    under concurrent committers (an optimistic-retry rebase keeps the
-    metrics computed against the losing parent); fsck remains the
-    ground truth."""
-    if parent is None:
-        base = dict.fromkeys(_TOTAL_KEYS, 0)
-    else:
-        base = parent.get("metrics", {}).get("table_totals")
-        if base is None:
-            return None
-    return {k: int(base[k]) + int(delta.get(k, 0)) for k in _TOTAL_KEYS}
-
-
-def merge_extra_schema(base: dict, add: dict) -> dict:
-    """Merge two extra-column schemas: identical types agree, int
-    widens to bigint and float to double (Iceberg's legal promotions),
-    anything else is an incompatible redefinition and fails loudly."""
-    out = dict(base)
-    for k, t in add.items():
-        prev = out.get(k)
-        if prev is None or prev == t:
-            out[k] = t
-        elif {prev, t} == {"int", "bigint"}:
-            out[k] = "bigint"
-        elif {prev, t} == {"float", "double"}:
-            out[k] = "double"
-        else:
-            raise ValueError(
-                f"incompatible schema evolution for column '{k}': "
-                f"{prev} -> {t} (only int -> bigint and float -> double "
-                "widening are allowed)")
-    return out
-
-
-def next_extra_schema_chain(parent: dict | None, this_schema: dict) -> dict | None:
-    """Cumulative merged extra-column schema over the ancestry, carried
-    in ``metrics.extra_schema_chain`` (expiry-safe like the other chain
-    metrics). None on a legacy chain whose parent lacks the field AND
-    has groups that might carry extras — consumers then walk the
-    retained chain's per-commit ``extra_schema`` entries."""
-    if parent is None:
-        return dict(this_schema)
-    pm = parent.get("metrics", {})
-    if "extra_schema_chain" in pm:
-        return merge_extra_schema(pm["extra_schema_chain"], this_schema)
-    if "extra_schema" in pm:
-        return None  # legacy-style chain with extras: walk instead
-    # parent chain never declared extras: safe to start the chain here
-    return dict(this_schema)
-
-
 def extra_schema_of(df: DataFrame) -> dict[str, str]:
     """Validate and collect a source frame's EXTRA columns (everything
     beyond the doc_id/tokens/n_tok/source core) — shared by encode and
@@ -472,27 +416,12 @@ def table_extra_schema(root: str, snapshot_id: int | None = None,
     return out
 
 
-def next_chain_max(parent: dict | None, this_max: int) -> int | None:
-    """Cumulative max doc_parts over the whole ancestry, carried in
-    ``metrics.max_doc_parts_chain`` so decode planning survives snapshot
-    expiry (an expired ancestor's per-commit metric is gone, but its
-    maximum lives on in every descendant). None on a legacy chain whose
-    parent lacks the field — decode then walks/probes."""
-    if parent is None:
-        return int(this_max)
-    pm = parent.get("metrics", {})
-    if "max_doc_parts_chain" not in pm:
-        return None
-    return max(int(pm["max_doc_parts_chain"]), int(this_max))
-
-
 def direct_write_supported(path: str) -> bool:
     """True when pyarrow can address ``path`` from inside workers.
     Plain local paths always qualify; URI roots only if pyarrow's C++
     filesystem layer resolves the scheme (file://, s3://, gs://, and
-    hdfs:// with libhdfs — but NOT Hadoop-only spellings like s3a://,
-    which the JVM writer handles). Callers fall back to the classic
-    JVM write when this is False."""
+    hdfs:// with libhdfs — but NOT Hadoop-only spellings like s3a://).
+    write_pages falls back to the JVM writer when this is False."""
     if "://" not in path:
         return True
     try:
@@ -510,24 +439,31 @@ def direct_write_supported(path: str) -> bool:
 META_DDL = ("grp int, file string, n_chunks bigint, n_rows bigint, "
             "n_tokens bigint, raw_bytes bigint, enc_bytes bigint, "
             "max_doc_parts int")
+_SUM_KEYS = ("n_rows", "n_tokens", "raw_bytes", "enc_bytes")
+_META_SCHEMA = pa.schema([("grp", pa.int32()), ("file", pa.string()),
+                          ("n_chunks", pa.int64()),
+                          *((k, pa.int64()) for k in _SUM_KEYS),
+                          ("max_doc_parts", pa.int32())])
+
+# task-side parquet settings: min/max statistics only on the scalar
+# metadata columns, dictionaries only on the low-cardinality codec-name
+# / source-set columns. The page, Bloom and extra-page blobs are never
+# filtered on, and statistics and dictionaries on them only add bytes
+# (pyarrow defaults: 4.6% larger files for 826 small chunks in 32 files)
+_STATS_COLS = [k for k, t in _PAGES_TYPES.items()
+               if not (pa.types.is_binary(t) or pa.types.is_map(t))]
+_DICT_COLS = ["tokens_codec", "doc_id_codec", "n_tok_codec", "source_codec",
+              "source_set"]
 
 
-def make_direct_writer(run_dir: str, parquet_codec: str,
-                       max_chunk_tokens: int = part.MAX_CHUNK_TOKENS,
-                       commit_groups: int = 1, uid_prefix: str | None = None,
-                       extra_cols: tuple = (), group_prefix: str = "g"):
-    """mapInArrow function: encode AND write pages parquet inside the
-    task (Iceberg's write pattern — tasks produce data files, the
-    driver commits the file list). Skips the classic path's two costs:
-    shipping ~chunk-sized page blobs back across the Arrow boundary and
-    the JVM row-assembly + parquet re-encode. Task retries write under
-    a fresh taskAttemptId-suffixed name, so a lost attempt leaves only
-    an orphan file that the driver's post-job sweep (or snapshot GC)
-    removes — the manifest lists exactly the files of attempts whose
-    result row was collected."""
-    inner = make_encoder(max_chunk_tokens, uid_prefix=uid_prefix,
-                         commit_groups=commit_groups, extra_cols=extra_cols,
-                         group_prefix=group_prefix)
+def _page_writer(run_dir: str, parquet_codec: str, kernel, groups: int):
+    """mapInArrow function: run ``kernel`` (rows -> page batches; None
+    when the input already is pages) and write the pages parquet inside
+    the task, one file per commit group (``salt % groups``). Page blobs
+    never travel back across the Arrow boundary for a JVM row assembly
+    and parquet re-encode. Task retries write under a fresh
+    taskAttemptId-suffixed name, so a lost attempt leaves only an orphan
+    file that write_pages sweeps. Yields one META_DDL row per file."""
     schema = pa.schema(_PAGES_TYPES)
 
     def write_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -542,48 +478,117 @@ def make_direct_writer(run_dir: str, parquet_codec: str,
         else:
             pafs_fs, base = None, run_dir
         writers: dict[int, pq.ParquetWriter] = {}
-        files: dict[int, str] = {}
         agg: dict[int, dict] = {}
         try:
-            for batch in inner(it):
-                salts = batch.column(1).to_numpy(zero_copy_only=False)
-                grps = salts % commit_groups
-                for g in np.unique(grps):
-                    g = int(g)
-                    sub = batch.filter(pa.array(grps == g))
+            for batch in (kernel(it) if kernel else it):
+                grps = batch.column("salt").to_numpy(zero_copy_only=False) % groups
+                present = np.unique(grps).tolist()
+                for g in present:
+                    sub = (batch if len(present) == 1
+                           else batch.filter(pa.array(grps == g)))
                     if g not in writers:
                         name = f"part-{pid:05d}-{att}-g{g}.parquet"
-                        files[g] = posixpath.join(run_dir, name)
                         writers[g] = pq.ParquetWriter(
                             posixpath.join(base, name), schema,
-                            compression=parquet_codec, filesystem=pafs_fs)
-                        agg[g] = {"n_chunks": 0, "n_rows": 0, "n_tokens": 0,
-                                  "raw_bytes": 0, "enc_bytes": 0,
+                            compression=parquet_codec, filesystem=pafs_fs,
+                            write_statistics=_STATS_COLS,
+                            use_dictionary=_DICT_COLS)
+                        agg[g] = {"file": posixpath.join(run_dir, name),
+                                  "n_chunks": 0, **dict.fromkeys(_SUM_KEYS, 0),
                                   "max_doc_parts": 1}
-                    writers[g].write_table(pa.Table.from_batches([sub]))
+                    writers[g].write_table(
+                        pa.Table.from_batches([sub]).cast(schema))
                     a = agg[g]
                     a["n_chunks"] += sub.num_rows
-                    a["n_rows"] += int(pc.sum(sub.column(4)).as_py() or 0)
-                    a["n_tokens"] += int(pc.sum(sub.column(5)).as_py() or 0)
-                    a["raw_bytes"] += int(pc.sum(sub.column(15)).as_py() or 0)
-                    a["enc_bytes"] += int(pc.sum(sub.column(16)).as_py() or 0)
+                    for k in _SUM_KEYS:
+                        a[k] += int(pc.sum(sub.column(k)).as_py() or 0)
                     a["max_doc_parts"] = max(
-                        a["max_doc_parts"], int(pc.max(sub.column(9)).as_py() or 1))
+                        a["max_doc_parts"],
+                        int(pc.max(sub.column("doc_parts")).as_py() or 1))
         finally:
             for w in writers.values():
                 w.close()
-        rows = [{"grp": g, "file": files[g], **agg[g]} for g in sorted(writers)]
-        if rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([r[k] for r in rows], type=t)
-                 for k, t in [("grp", pa.int32()), ("file", pa.string()),
-                              ("n_chunks", pa.int64()), ("n_rows", pa.int64()),
-                              ("n_tokens", pa.int64()), ("raw_bytes", pa.int64()),
-                              ("enc_bytes", pa.int64()), ("max_doc_parts", pa.int32())]],
-                names=["grp", "file", "n_chunks", "n_rows", "n_tokens",
-                       "raw_bytes", "enc_bytes", "max_doc_parts"])
+        if agg:
+            rows = [{"grp": g, **agg[g]} for g in sorted(agg)]
+            yield pa.RecordBatch.from_pylist(rows, schema=_META_SCHEMA)
 
     return write_batches
+
+
+def write_pages(tbl: SnapshotTable, src: DataFrame, kernel, groups: int,
+                codec: str) -> list[tuple[list[str], dict]]:
+    """The one page sink: write ``src`` — through the mapInArrow page
+    ``kernel`` (e.g. make_encoder's), or as-is when ``kernel`` is None
+    and ``src`` already holds PAGES_DDL rows — into a fresh run dir of
+    ``tbl``, split into ``groups`` commit groups by ``salt % groups``.
+    Returns, per group, its exact sorted file list and metrics
+    (n_chunks, n_rows, n_tokens, raw_bytes, enc_bytes, max_doc_parts)
+    for the caller's commit.
+
+    Pages are written task-side with pyarrow (Iceberg's task-file /
+    driver-manifest split); files of lost or retried attempts are swept
+    before returning. Only a root pyarrow cannot address from workers
+    (direct_write_supported) takes Spark's JVM parquet writer instead,
+    with the same file-list result. ``codec`` wraps the already
+    entropy-tight pages: zstd, the default everywhere, measured 6%
+    smaller than snappy at equal write wall and with faster reads."""
+    run_dir = tbl.new_run_dir()
+    if kernel is None:
+        src = src.select(*_PAGES_TYPES)
+    if not direct_write_supported(tbl.root):
+        return _write_pages_jvm(tbl, src, kernel, groups, codec, run_dir)
+    tbl.fs.mkdirs(run_dir)
+    meta = src.mapInArrow(_page_writer(run_dir, codec, kernel, groups),
+                          META_DDL).collect()
+    # sweep orphans from lost/retried attempts BEFORE committing: only
+    # files whose result row was collected are real
+    _sweep_orphans(tbl.fs, run_dir,
+                   {r["file"].rsplit("/", 1)[-1] for r in meta})
+    if not meta:
+        # nothing written: drop the run dir instead of stranding it
+        tbl.fs.delete(run_dir, recursive=True)
+    out = []
+    for g in range(groups):
+        rows = [r for r in meta if r["grp"] == g]
+        m = {"n_chunks": sum(r["n_chunks"] for r in rows),
+             **{k: sum(r[k] for r in rows) for k in _SUM_KEYS},
+             "max_doc_parts": max((r["max_doc_parts"] for r in rows),
+                                  default=0)}
+        out.append((sorted(r["file"] for r in rows), m))
+    return out
+
+
+def _write_pages_jvm(tbl: SnapshotTable, src: DataFrame, kernel, groups: int,
+                     codec: str, run_dir: str) -> list[tuple[list[str], dict]]:
+    """write_pages' fallback for Hadoop-only schemes: Spark's parquet
+    writer partitioned by group, per-group metrics aggregated during the
+    write itself (Observation), and each group dir's files listed."""
+    from pyspark.sql import Observation
+    pages = src.mapInArrow(kernel, PAGES_DDL) if kernel else src
+    grp = F.pmod(F.col("salt"), F.lit(groups))
+    aggs = []
+    for g in range(groups):
+        c = grp == g
+        aggs += [F.count(F.when(c, 1)).alias(f"n_chunks_{g}"),
+                 *(F.sum(F.when(c, F.col(k))).alias(f"{k}_{g}")
+                   for k in _SUM_KEYS),
+                 F.max(F.when(c, F.col("doc_parts"))).alias(f"max_doc_parts_{g}")]
+    obs = Observation()
+    (pages.withColumn("grp", grp).observe(obs, *aggs)
+     .write.mode("overwrite").option("compression", codec)
+     .partitionBy("grp").parquet(run_dir))
+    got = obs.get
+    out = []
+    for g in range(groups):
+        gdir = posixpath.join(run_dir, f"grp={g}")
+        files = (sorted(posixpath.join(gdir, n) for n in tbl.fs.listdir(gdir)
+                        if n.endswith(".parquet"))
+                 if tbl.fs.exists(gdir) else [])
+        out.append((files, {k: int(got[f"{k}_{g}"] or 0)
+                            for k in ("n_chunks", *_SUM_KEYS, "max_doc_parts")}))
+    if not any(files for files, _ in out):
+        tbl.fs.delete(run_dir, recursive=True)
+    return out
 
 
 def encode(spark: SparkSession, df: DataFrame, out_root: str,
@@ -591,7 +596,6 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
            max_chunk_tokens: int = part.MAX_CHUNK_TOKENS,
            partitions: int | None = None,
            parquet_codec: str = "zstd",
-           direct_write: bool = False,
            extra_metrics: dict | None = None,
            group_prefix: str = "g",
            branch: str | None = None) -> DataFrame:
@@ -618,22 +622,21 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
     chunks decode them as NULL) or widen int to bigint / float to
     double; decode resolves the merged schema from the manifest chain.
 
-    ``direct_write=True`` writes pages parquet with pyarrow inside each
-    task and commits the collected file list (Iceberg's task-file /
-    driver-manifest split) instead of shipping page blobs back through
-    Arrow for a JVM ``partitionBy`` write — same bytes per chunk, same
-    read path, measurably faster end-to-end (BASELINE.md).
+    Pages go through write_pages: each task encodes AND writes its pages
+    parquet with pyarrow, and each group commit lists the exact files
+    (Iceberg's task-file / driver-manifest split). Roots pyarrow cannot
+    address from workers (Hadoop-only schemes such as s3a://) fall back
+    to Spark's JVM parquet writer — same chunk bytes, same file-list
+    commits.
 
     All remaining commit groups are encoded in ONE pass over the source
-    (group = salt % commit_groups, written side-by-side via
-    ``partitionBy``), then committed group-by-group in order — the
-    source is read exactly once no matter how many groups, and a job
-    resumed after a partial commit re-encodes only the missing groups
-    (one filtered pass). Chunk bytes are invariant to grouping: chunks
-    are cut inside (bucket, salt) segments and a salt is never split
-    across groups.
+    (group = salt % commit_groups, one file per task and group), then
+    committed group-by-group in order — the source is read exactly once
+    no matter how many groups, and a job resumed after a partial commit
+    re-encodes only the missing groups (one filtered pass). Chunk bytes
+    are invariant to grouping: chunks are cut inside (bucket, salt)
+    segments and a salt is never split across groups.
     """
-    from tokencodec.spark.table import is_delete_group
     if is_delete_group(group_prefix):
         raise ValueError(f"group_prefix '{group_prefix}' collides with "
                          "delete-manifest group keys")
@@ -699,148 +702,36 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
                      F.lit(commit_groups))
         sub = df.filter(grp.isin([int(g) for g in remaining]))
     bucketed = part.bucketed(sub, n_salts=n_salts, partitions=partitions)
-    if direct_write and not direct_write_supported(out_root):
-        # Hadoop-only scheme (e.g. hdfs:// without libhdfs): the JVM
-        # writer handles it, pyarrow in workers cannot — fall back
-        import warnings
-        warnings.warn(f"direct_write unsupported for {out_root}: "
-                      "pyarrow cannot resolve the scheme in workers; "
-                      "using the classic JVM write")
-        direct_write = False
-    sel_cols = _COLS + [n for n, _ in extra_cols]
-    if direct_write:
-        run_dir = tbl.new_run_dir()
-        tbl.fs.mkdirs(run_dir)
-        writer_fn = make_direct_writer(run_dir, parquet_codec,
-                                       max_chunk_tokens, commit_groups,
-                                       extra_cols=extra_cols,
-                                       group_prefix=group_prefix)
-        meta = bucketed.select(sel_cols).mapInArrow(writer_fn, META_DDL).collect()
-        wall = time.time() - t0
-        # sweep orphans from lost/retried attempts BEFORE committing:
-        # only files whose result row was collected are real
-        _sweep_orphans(tbl.fs, run_dir,
-                       {r["file"].rsplit("/", 1)[-1] for r in meta})
-        if not meta:
-            # zero-row source: nothing written — drop the run dir
-            # instead of stranding it unreferenced forever
-            tbl.fs.delete(run_dir, recursive=True)
-        parent = tbl.current_snapshot()
-        for g in remaining:
-            rows = [r for r in meta if r["grp"] == g]
-            m = {"n_chunks": sum(r["n_chunks"] for r in rows),
-                 "n_rows": sum(r["n_rows"] for r in rows),
-                 "n_tokens": sum(r["n_tokens"] for r in rows),
-                 "raw_bytes": sum(r["raw_bytes"] for r in rows),
-                 "enc_bytes": sum(r["enc_bytes"] for r in rows),
-                 "max_doc_parts": max((r["max_doc_parts"] for r in rows),
-                                      default=0),
-                 "scheme": scheme, **(extra_metrics or {})}
-            if extra_schema:
-                m["extra_schema"] = extra_schema
-            esc = next_extra_schema_chain(parent, extra_schema)
-            if esc is not None:
-                m["extra_schema_chain"] = esc
-            if rows:
-                m["pass_wall_sec"] = round(wall, 3)
-                m["pass_groups"] = len(remaining)
-            totals = next_table_totals(parent, m)
-            if totals is not None:
-                m["table_totals"] = totals
-            cmax = next_chain_max(parent, m["max_doc_parts"])
-            if cmax is not None:
-                m["max_doc_parts_chain"] = cmax
-            parent = tbl.commit(
-                {f"{group_prefix}{g}": sorted(r["file"] for r in rows)},
-                metrics=m)
-        return read_pages(spark, out_root, branch=branch)
     encoder = make_encoder(max_chunk_tokens, commit_groups=commit_groups,
                            extra_cols=extra_cols, group_prefix=group_prefix)
-    pages = bucketed.select(sel_cols).mapInArrow(encoder, PAGES_DDL)
-    # per-group commit metrics ride along with the write action itself
-    # (Observation aggregates during the job) — the former read-back of
-    # the freshly written parquet cost a full extra pages scan per group
-    from pyspark.sql import Observation
-    obs = Observation()
-    _METRIC_AGGS = {
-        "n_chunks": lambda c: F.count(F.when(c, 1)),
-        "n_rows": lambda c: F.sum(F.when(c, F.col("n_rows"))),
-        "n_tokens": lambda c: F.sum(F.when(c, F.col("n_tokens"))),
-        "raw_bytes": lambda c: F.sum(F.when(c, F.col("raw_bytes"))),
-        # recorded so decode() can plan the reassembly branch without
-        # running a metadata probe job (zero-job plan construction)
-        "enc_bytes": lambda c: F.sum(F.when(c, F.col("enc_bytes"))),
-        "max_doc_parts": lambda c: F.max(F.when(c, F.col("doc_parts"))),
-    }
-    aggs = []
-    for g in remaining:
-        cond = F.pmod(F.col("salt"), F.lit(commit_groups)) == g
-        aggs += [fn(cond).alias(f"{name}_{g}") for name, fn in _METRIC_AGGS.items()]
-    pages = pages.observe(obs, *aggs)
-    run_dir = tbl.new_run_dir()
-    # parquet_codec wraps the (already entropy-tight) pages: zstd is the
-    # measured dominant default on 149M tokens — write wall equal to
-    # snappy within noise (2.97 vs 2.77 s interleaved min), 6% smaller
-    # files (124 vs 132 MB), and FASTER decode reads (1.19 vs 1.34 s
-    # packed); pass "uncompressed" when write CPU is the binding
-    # resource instead of IO
-    writer = pages.write.mode("overwrite").option("compression", parquet_codec)
-    if commit_groups == 1:
-        writer.parquet(run_dir)
-        group_dirs = {0: run_dir}
-    else:
-        (pages.withColumn("grp", F.pmod(F.col("salt"), F.lit(commit_groups)))
-         .write.mode("overwrite").option("compression", parquet_codec)
-         .partitionBy("grp").parquet(run_dir))
-        group_dirs = {g: os.path.join(run_dir, f"grp={g}") for g in remaining}
+    written = write_pages(tbl, bucketed.select(_COLS + [n for n, _ in extra_cols]),
+                          encoder, commit_groups, parquet_codec)
     wall = time.time() - t0
-    observed = obs.get
-    parent = tbl.current_snapshot()
     for g in remaining:
-        gdir = group_dirs[g]
-        m = {name: int(observed[f"{name}_{g}"] or 0) for name in _METRIC_AGGS}
-        m["scheme"] = scheme
-        m.update(extra_metrics or {})
+        files, m = written[g]
+        m.update({"scheme": scheme, **(extra_metrics or {})})
         if extra_schema:
             m["extra_schema"] = extra_schema
-        esc = next_extra_schema_chain(parent, extra_schema)
-        if esc is not None:
-            m["extra_schema_chain"] = esc
-        totals = next_table_totals(parent, m)
-        if totals is not None:
-            m["table_totals"] = totals
-        cmax = next_chain_max(parent, m["max_doc_parts"])
-        if cmax is not None:
-            m["max_doc_parts_chain"] = cmax
-        # a group with zero rows may leave no dir (partitionBy) or a dir
-        # with only _SUCCESS (commit_groups=1): either way commit an
-        # empty path list so resume knows the group is done and readers
-        # see a valid empty table
-        if m["n_chunks"] == 0 or not _has_parquet(tbl.fs, gdir):
-            parent = tbl.commit({f"{group_prefix}{g}": []}, metrics=m)
-            continue
-        m["pass_wall_sec"] = round(wall, 3)
-        m["pass_groups"] = len(remaining)
-        parent = tbl.commit({f"{group_prefix}{g}": [gdir]}, metrics=m)
+        if files:
+            m["pass_wall_sec"] = round(wall, 3)
+            m["pass_groups"] = len(remaining)
+        # a group with zero rows commits an empty path list, so resume
+        # knows the group is done and readers see a valid empty table
+        tbl.commit({f"{group_prefix}{g}": files}, metrics=m)
     return read_pages(spark, out_root, branch=branch)
 
 
 def _sweep_orphans(fs, run_dir: str, keep: set[str]) -> list[str]:
     """Delete .parquet files in ``run_dir`` not in ``keep`` (base
-    names). Safe because each encode job writes into its own fresh run
-    dir: anything unreferenced there is a lost/retried task attempt."""
+    names). Safe because each write_pages call writes into its own
+    fresh run dir: anything unreferenced there is a lost/retried task
+    attempt."""
     swept = []
     for name in fs.listdir(run_dir):
         if name.endswith(".parquet") and name not in keep:
             fs.delete(posixpath.join(run_dir, name))
             swept.append(name)
     return swept
-
-
-def _has_parquet(fs, d: str) -> bool:
-    if not fs.exists(d):
-        return False
-    return any(n.endswith(".parquet") for n in fs.listdir(d))
 
 
 # --------------------------------------------------------------- fast source
@@ -1003,15 +894,11 @@ def encode_from_parquet(spark: SparkSession, src_dir: "str | list[str]",
                         out_root: str, **kw) -> DataFrame:
     """encode() over a parquet directory via the fast file-split source;
     one footer pass discovers splits, the row count for salting, and the
-    byte size for task sizing. Defaults to the direct task-side write
-    (pages parquet never crosses the Arrow boundary back to the JVM):
-    measured at 149M tokens/local[32] it is ~13% faster warm with far
-    tighter walls (2.5-2.9 s vs 2.9-11.5 s) and byte-equal output."""
+    byte size for task sizing."""
     splits, n_rows, n_bytes = parquet_splits(src_dir, return_stats=True)
     kw.setdefault("n_salts", part.salts_for(n_rows))
     kw.setdefault("partitions", max(spark.sparkContext.defaultParallelism,
                                     n_bytes // TARGET_TASK_BYTES))
-    kw.setdefault("direct_write", True)
     return encode(spark, pack_source(spark, src_dir, splits), out_root, **kw)
 
 
@@ -1035,7 +922,6 @@ def read_pages(spark: SparkSession, root: str,
     snap = tbl.current_snapshot() if snapshot_id is None else tbl.snapshot(snapshot_id)
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
-    from tokencodec.spark.table import is_delete_group
     paths = [p for k, ps in tbl.resolve_groups(snap).items()
              if not is_delete_group(k) for p in ps]
     if not paths:

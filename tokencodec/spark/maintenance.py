@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from tokencodec import grouped, pageformat
 from tokencodec.spark import partition as part
 from tokencodec.spark.encode_job import (PAGES_DDL, _encode_chunk,
-                                         next_extra_schema_chain, read_pages)
+                                         read_pages, write_pages)
 from tokencodec.spark.table import SnapshotTable, is_delete_group
 
 _PAGE_COLS = ["page_tokens", "page_doc_id", "page_n_tok", "page_source"]
@@ -210,7 +210,7 @@ def compact(spark: SparkSession, root: str,
     Returns the new snapshot dict (or the current one if nothing to do).
 
     FILE-GRANULAR (Iceberg's rewrite-data-files): when every committed
-    path is a file (the direct-write default), only files smaller than
+    path is a file (every page-sink commit), only files smaller than
     ``small_file_bytes`` are read and rewritten — healthy big files stay
     referenced untouched, so one compaction pass costs O(small files),
     not O(table). Legacy tables with directory paths fall back to the
@@ -371,29 +371,15 @@ def compact(spark: SparkSession, root: str,
     untouched = marked.join(counts, ["bucket", "salt", "gid"],
                             "left_anti").select(*merged.columns)
     out = untouched.unionByName(merged)
-    from pyspark.sql import Observation
-    obs = Observation()
-    out = out.observe(obs,
-                      F.count(F.lit(1)).alias("n_chunks"),
-                      F.sum("enc_bytes").alias("enc_bytes"))
-    run_dir = tbl.new_run_dir()
-    (out.write.mode("overwrite").option("compression", parquet_codec)
-        .parquet(run_dir))
-    written = {k: int(v or 0) for k, v in obs.get.items()}
-    # commit the written FILES, not the run dir, so the rewritten data
-    # stays file-granular for the next compaction (Spark's output
-    # committer has already cleaned attempt temporaries)
-    new_files = sorted(
-        posixpath.join(run_dir, n) for n in tbl.fs.listdir(run_dir)
-        if n.endswith(".parquet"))
+    [(new_files, written)] = write_pages(tbl, out, None, 1, parquet_codec)
     # table-wide metrics = whole-table totals, minus the selected files'
     # contribution, plus what was just written. Totals are RECOMPUTED
     # from a metadata-column aggregate over the committed files (page
-    # blobs never read): the chain's cumulative metrics.table_totals is
-    # advisory (a lost optimistic-concurrency race can leave it missing
-    # the winner's delta), and compact re-anchors the chain from this
-    # value, so trusting it would make any drift permanent. Compact is
-    # already a table-scale job; one footer-stats aggregate is noise.
+    # blobs never read): compact re-anchors the chain from this value,
+    # so it must be ground truth even on chains whose totals are absent
+    # (legacy) or were written by older engines that derived them
+    # outside the commit loop. Compact is already a table-scale job;
+    # one footer-stats aggregate is noise.
     tot = (read_pages(spark, root).na.fill({"doc_parts": 1})
            .agg(F.count(F.lit(1)).alias("n_chunks"),
                 F.sum("n_rows").alias("n_rows"),
@@ -426,9 +412,6 @@ def compact(spark: SparkSession, root: str,
     m["table_totals"] = {k: m[k] for k in
                          ("n_chunks", "n_rows", "n_tokens", "enc_bytes")}
     m["max_doc_parts_chain"] = m["max_doc_parts"]
-    esc = next_extra_schema_chain(snap, {})
-    if esc is not None:
-        m["extra_schema_chain"] = esc
     # every group keeps its unselected files; the rewritten run dir is
     # attached to the first group key (chunk group identity lives in the
     # chunk_uid prefix, not in which file holds the chunk)
@@ -487,19 +470,9 @@ def delete_docs(spark: SparkSession, root: str, doc_ids,
     df.write.mode("overwrite").parquet(run_dir)
     files = sorted(posixpath.join(run_dir, n)
                    for n in tbl.fs.listdir(run_dir) if n.endswith(".parquet"))
-    from tokencodec.spark.encode_job import (next_chain_max,
-                                             next_extra_schema_chain,
-                                             next_table_totals)
-    m: dict = {"op": "delete", "n_delete_ids": int(n_ids)}
-    totals = next_table_totals(snap, {})
-    if totals is not None:
-        m["table_totals"] = totals  # logical deletes change no pages
-    cmax = next_chain_max(snap, 0)
-    if cmax is not None:
-        m["max_doc_parts_chain"] = cmax
-    esc = next_extra_schema_chain(snap, {})
-    if esc is not None:
-        m["extra_schema_chain"] = esc
+    # logical deletes change no pages: commit() carries the chain's
+    # totals forward unchanged
+    m = {"op": "delete", "n_delete_ids": int(n_ids)}
     return tbl.commit({f"del:{_uuid.uuid4().hex[:8]}": files}, metrics=m)
 
 
@@ -522,9 +495,7 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
     scheme (the scheme metric is read from the target snapshot's own
     chain)."""
     from tokencodec.spark.decode_job import _scheme_from_manifest, decode
-    from tokencodec.spark.encode_job import (make_encoder,
-                                             next_extra_schema_chain,
-                                             table_extra_schema)
+    from tokencodec.spark.encode_job import make_encoder, table_extra_schema
 
     if int(n_salts) <= 0:
         raise ValueError("n_salts must be positive")
@@ -552,22 +523,7 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
     uid_prefix = f"rs{snap['snapshot_id'] + 1}"
     encoder = make_encoder(max_chunk_tokens, commit_groups=1,
                            extra_cols=extra_cols, group_prefix=uid_prefix)
-    pages = bucketed.mapInArrow(encoder, PAGES_DDL)
-    from pyspark.sql import Observation
-    obs = Observation()
-    pages = pages.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        F.max("doc_parts").alias("max_doc_parts"))
-    run_dir = tbl.new_run_dir()
-    (pages.write.mode("overwrite")
-     .option("compression", parquet_codec).parquet(run_dir))
-    got = obs.get
-    m = {k: int(got[k] or 0) for k in
-         ("n_chunks", "n_rows", "n_tokens", "enc_bytes", "max_doc_parts")}
+    [(files, m)] = write_pages(tbl, bucketed, encoder, 1, parquet_codec)
     scheme = {"group_scheme": "salt_mod", "n_salts": int(n_salts),
               "commit_groups": 1}
     m.update({"op": "resalt", "scheme": scheme,
@@ -576,9 +532,6 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
                          "n_tokens": m["n_tokens"],
                          "enc_bytes": m["enc_bytes"]}
     m["max_doc_parts_chain"] = m["max_doc_parts"]
-    esc = next_extra_schema_chain(snap, {})
-    if esc is not None:
-        m["extra_schema_chain"] = esc
     # replace-commit: every old data group empties, the first carries
     # the new layout (purge's attachment shape); old files stay
     # referenced by parent snapshots until expiry, so time travel
@@ -589,7 +542,7 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
         if is_delete_group(k):
             new_groups[k] = []
             continue
-        new_groups[k] = [] if attached else [run_dir]
+        new_groups[k] = [] if attached else files
         attached = True
     if not attached:
         raise ValueError(f"no data groups to resalt under {root}")
@@ -683,8 +636,7 @@ def upsert_docs(spark: SparkSession, root: str, df: DataFrame,
 
 def _upsert_pinned(spark, tbl, snap, df, scheme, extra_schema, extra_cols,
                    nonce, prefix, max_chunk_tokens, parquet_codec) -> dict:
-    from tokencodec.spark.encode_job import (make_encoder, next_chain_max,
-                                             next_table_totals)
+    from tokencodec.spark.encode_job import make_encoder
     # replacement ids -> delete manifest (same shape as delete_docs)
     ids_df = df.select("doc_id").distinct()
     n_ids = ids_df.count()
@@ -704,40 +656,11 @@ def _upsert_pinned(spark, tbl, snap, df, scheme, extra_schema, extra_cols,
                              partitions=spark.sparkContext.defaultParallelism)
     encoder = make_encoder(max_chunk_tokens, commit_groups=1,
                            extra_cols=extra_cols, group_prefix=prefix)
-    pages = bucketed.mapInArrow(encoder, PAGES_DDL)
-    from pyspark.sql import Observation
-    obs = Observation()
-    pages = pages.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        F.max("doc_parts").alias("max_doc_parts"))
-    run_dir = tbl.new_run_dir()
-    (pages.write.mode("overwrite")
-     .option("compression", parquet_codec).parquet(run_dir))
-    got = obs.get
-    m = {k: int(got[k] or 0) for k in
-         ("n_chunks", "n_rows", "n_tokens", "raw_bytes", "enc_bytes",
-          "max_doc_parts")}
+    [(data_files, m)] = write_pages(tbl, bucketed, encoder, 1, parquet_codec)
     m.update({"op": "upsert", "n_delete_ids": int(n_ids),
               "scheme": scheme})
     if extra_schema:
         m["extra_schema"] = extra_schema
-    esc = next_extra_schema_chain(snap, extra_schema)
-    if esc is not None:
-        m["extra_schema_chain"] = esc
-    totals = next_table_totals(snap, m)
-    if totals is not None:
-        m["table_totals"] = totals
-    cmax = next_chain_max(snap, m["max_doc_parts"])
-    if cmax is not None:
-        m["max_doc_parts_chain"] = cmax
-    data_files = [run_dir] if m["n_chunks"] else []
-    if not m["n_chunks"]:
-        tbl.fs.delete(run_dir, recursive=True)
     # ONE commit: replacements + their equality-delete manifest land
     # at the same sequence number (all-or-nothing for readers)
     return tbl.commit({f"{prefix}0": data_files,
@@ -929,25 +852,14 @@ def purge_deletes(spark: SparkSession, root: str,
                     spark, pages,
                     _path_seq_map(grp_map, seqs, min(known.values())))
                 sel_cols = sel_cols + ["data_seq"]
-            pages = pages.select(*sel_cols)
-            out = pages.mapInArrow(_purge_batches(ids, uid_prefix),
-                                   PAGES_DDL)
-            from pyspark.sql import Observation
-            obs = Observation()
-            out = out.observe(obs, F.sum("n_rows").alias("rows_after"))
-            run_dir = tbl.new_run_dir()
-            (out.write.mode("overwrite")
-             .option("compression", parquet_codec).parquet(run_dir))
-            rows_after = int(obs.get["rows_after"] or 0)
+            # the purge kernel runs inside the page sink's write task
+            [(new_files, written)] = write_pages(
+                tbl, pages.select(*sel_cols), _purge_batches(ids, uid_prefix),
+                1, parquet_codec)
             rows_before = int(
                 spark.read.schema(PAGES_DDL).parquet(*selected)
                 .agg(F.sum("n_rows")).collect()[0][0] or 0)
-            n_purged_rows = rows_before - rows_after
-            new_files = sorted(
-                posixpath.join(run_dir, n) for n in tbl.fs.listdir(run_dir)
-                if n.endswith(".parquet"))
-            if not new_files:
-                tbl.fs.delete(run_dir, recursive=True)
+            n_purged_rows = rows_before - written["n_rows"]
     # post-purge table totals from the surviving layout (metadata cols)
     sel_set = set(selected)
     kept = [p for p in data_paths if p not in sel_set] + new_files
@@ -974,9 +886,6 @@ def purge_deletes(spark: SparkSession, root: str,
     m["table_totals"] = {k: m[k] for k in
                          ("n_chunks", "n_rows", "n_tokens", "enc_bytes")}
     m["max_doc_parts_chain"] = m["max_doc_parts"]
-    esc = next_extra_schema_chain(snap, {})
-    if esc is not None:
-        m["extra_schema_chain"] = esc
     new_groups: dict[str, list[str]] = {}
     attached = False
     for k in sorted(grp_map):
@@ -1022,10 +931,7 @@ def publish_staged(main_root: str, staging_root: str,
     table references. Pass False only if you delete the staging
     manifests yourself."""
     from urllib.parse import urlparse
-    from tokencodec.spark.encode_job import (next_chain_max,
-                                             next_extra_schema_chain,
-                                             next_table_totals,
-                                             table_extra_schema)
+    from tokencodec.spark.encode_job import table_extra_schema
 
     if urlparse(main_root).scheme != urlparse(staging_root).scheme:
         raise ValueError(
@@ -1094,15 +1000,6 @@ def publish_staged(main_root: str, staging_root: str,
         m["scheme"] = s_scheme  # first data on an empty main table
     if s_extra:
         m["extra_schema"] = s_extra
-    esc = next_extra_schema_chain(parent, s_extra)
-    if esc is not None:
-        m["extra_schema_chain"] = esc
-    totals = next_table_totals(parent, m)
-    if totals is not None:
-        m["table_totals"] = totals
-    cmax = next_chain_max(parent, s_parts)
-    if cmax is not None:
-        m["max_doc_parts_chain"] = cmax
     snap = dst.commit(dict(s_groups), metrics=m)
     if retire_staging:
         src.fs.delete(src.manifest_dir, recursive=True)
@@ -1182,10 +1079,7 @@ def publish_branch(root: str, name: str, drop: bool = False,
     successful publish. The default keeps it (an Iceberg fast-forward
     leaves the branch in place); either way the data files are shared
     with main, so nothing is moved or re-owned."""
-    from tokencodec.spark.encode_job import (next_chain_max,
-                                             next_extra_schema_chain,
-                                             next_table_totals,
-                                             table_extra_schema)
+    from tokencodec.spark.encode_job import table_extra_schema
 
     main = SnapshotTable(root, fs=fs)
     br = SnapshotTable(root, fs=fs, branch=name)
@@ -1217,7 +1111,6 @@ def publish_branch(root: str, name: str, drop: bool = False,
     if h_tot is None or f_tot is None:
         raise ValueError(
             f"branch {name!r} predates table_totals metrics; re-fork it")
-    parent = main.current_snapshot()
     b_parts = max((int(s.get("metrics", {}).get("max_doc_parts", 0))
                    for s in br.chain()), default=0)
     b_parts = max(b_parts, int(hm.get("max_doc_parts_chain", 0)))
@@ -1233,15 +1126,6 @@ def publish_branch(root: str, name: str, drop: bool = False,
     }
     if b_extra:
         m["extra_schema"] = b_extra
-    esc = next_extra_schema_chain(parent, b_extra)
-    if esc is not None:
-        m["extra_schema_chain"] = esc
-    totals = next_table_totals(parent, m)
-    if totals is not None:
-        m["table_totals"] = totals
-    cmax = next_chain_max(parent, b_parts)
-    if cmax is not None:
-        m["max_doc_parts_chain"] = cmax
     snap = main.commit(delta, metrics=m)
     if drop:
         main.drop_branch(name)
@@ -1260,9 +1144,6 @@ def rewrite_manifests(root: str, fs=None) -> dict:
     expiry / orphan GC. No-op (returns the current snapshot) when the
     metadata is already in its best shape: no sets and an inline map
     under the spill threshold, or a single consolidated set."""
-    from tokencodec.spark.encode_job import (next_chain_max,
-                                             next_extra_schema_chain,
-                                             next_table_totals)
     from tokencodec.spark.table import spill_threshold
 
     tbl = SnapshotTable(root, fs=fs)
@@ -1273,18 +1154,8 @@ def rewrite_manifests(root: str, fs=None) -> dict:
     if (not sets and len(snap["groups"]) <= spill_threshold()) or \
             (len(sets) == 1 and not snap["groups"]):
         return snap
-    m: dict = {"op": "rewrite_manifests",
-               "sets_before": len(sets),
-               "inline_before": len(snap["groups"])}
-    totals = next_table_totals(snap, {})
-    if totals is not None:
-        m["table_totals"] = totals  # metadata-only: no page changes
-    cmax = next_chain_max(snap, 0)
-    if cmax is not None:
-        m["max_doc_parts_chain"] = cmax
-    esc = next_extra_schema_chain(snap, {})
-    if esc is not None:
-        m["extra_schema_chain"] = esc
+    m = {"op": "rewrite_manifests", "sets_before": len(sets),
+         "inline_before": len(snap["groups"])}
     return tbl.commit({}, metrics=m, consolidate=True)
 
 

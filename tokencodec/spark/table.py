@@ -81,6 +81,70 @@ def is_delete_group(key: str) -> bool:
     return key.startswith(DELETE_GROUP_PREFIX)
 
 
+def merge_extra_schema(base: dict, add: dict) -> dict:
+    """Merge two extra-column schemas: identical types agree, int
+    widens to bigint and float to double (Iceberg's legal promotions),
+    anything else is an incompatible redefinition and fails loudly."""
+    out = dict(base)
+    for k, t in add.items():
+        prev = out.get(k)
+        if prev is None or prev == t:
+            out[k] = t
+        elif {prev, t} == {"int", "bigint"}:
+            out[k] = "bigint"
+        elif {prev, t} == {"float", "double"}:
+            out[k] = "double"
+        else:
+            raise ValueError(
+                f"incompatible schema evolution for column '{k}': "
+                f"{prev} -> {t} (only int -> bigint and float -> double "
+                "widening are allowed)")
+    return out
+
+
+_TOTAL_KEYS = ("n_chunks", "n_rows", "n_tokens", "enc_bytes")
+
+
+def _chain_metrics(parent: dict | None, m: dict, adds_data: bool) -> dict:
+    """The cumulative fields a commit carries so readers never walk the
+    chain (all survive snapshot expiry: an expired ancestor's values
+    live on in every descendant), derived from the parent the commit
+    lands on and the commit's own metrics:
+
+    - ``table_totals``: parent totals plus this commit's
+      n_chunks/n_rows/n_tokens/enc_bytes (maintenance needs no table
+      scan to know table size);
+    - ``max_doc_parts_chain``: max of the parent's and this commit's
+      ``max_doc_parts`` (decode plans split-doc reassembly from it);
+    - ``extra_schema_chain``: the parent's merged with this commit's
+      ``extra_schema`` (decode's read schema).
+
+    A field is omitted — unknown, readers fall back to walking or
+    aggregating — when the parent predates it (a legacy chain), or when
+    the commit adds data paths without stating the metric it needs.
+    Delete and metadata-only commits add no pages: absent deltas are
+    zero for them."""
+    pm = parent.get("metrics", {}) if parent is not None else {}
+    out: dict = {}
+    base = (dict.fromkeys(_TOTAL_KEYS, 0) if parent is None
+            else pm.get("table_totals"))
+    if base is not None and ("n_chunks" in m or not adds_data):
+        out["table_totals"] = {k: int(base[k]) + int(m.get(k, 0))
+                               for k in _TOTAL_KEYS}
+    pmax = 0 if parent is None else pm.get("max_doc_parts_chain")
+    if pmax is not None and ("max_doc_parts" in m or not adds_data):
+        out["max_doc_parts_chain"] = max(int(pmax),
+                                         int(m.get("max_doc_parts", 0)))
+    this_schema = m.get("extra_schema", {})
+    if "extra_schema_chain" in pm:
+        out["extra_schema_chain"] = merge_extra_schema(
+            pm["extra_schema_chain"], this_schema)
+    elif "extra_schema" not in pm:
+        # the parent chain never declared extras: safe to start here
+        out["extra_schema_chain"] = dict(this_schema)
+    return out
+
+
 # ---------------------------------------------------------------- groupsets
 # Spilled group manifests (Iceberg's manifest list): a snapshot that
 # inlines the whole {group: paths} map rewrites O(total groups) of JSON
@@ -395,14 +459,26 @@ class SnapshotTable:
             raise ValueError(f"cannot tag an empty table at {self.root}")
         ref = {"name": name, "snapshot_id": snap["snapshot_id"],
                "created_ms": int(time.time() * 1000)}
-        try:
-            self.fs.create_excl(self._ref_path(name),
-                                json.dumps(ref, indent=1))
-        except FileExistsError:
+        if not self._create_ref(self._ref_path(name), ref):
             raise ValueError(
                 f"tag {name!r} already exists (tags are immutable; "
-                "drop_tag first to re-point it)") from None
+                "drop_tag first to re-point it)")
         return ref
+
+    def _create_ref(self, path: str, doc: dict) -> bool:
+        """Create-exclusive ``doc`` at ``path``. False when another
+        writer's document occupies it; True when we created it — also
+        when the occupant IS ``doc`` (our PUT landed, its response was
+        lost, and a client retry hit the precondition), the ambiguous
+        case commit() resolves the same way."""
+        try:
+            self.fs.create_excl(path, json.dumps(doc, indent=1))
+        except FileExistsError:
+            try:
+                return json.loads(self.fs.read_text(path)) == doc
+            except (OSError, ValueError):
+                return False
+        return True
 
     def drop_tag(self, name: str) -> None:
         path = self._ref_path(name)
@@ -525,13 +601,10 @@ class SnapshotTable:
                     if is_delete_group(g) or s >= min_seq}
             # all-legacy deletes: no attribution to carry — the branch
             # falls back to global masking exactly like its base
-        try:
-            self.fs.create_excl(self._snap_path_in(bdir, 0),
-                                json.dumps(fork, indent=1))
-        except FileExistsError:
+        if not self._create_ref(self._snap_path_in(bdir, 0), fork):
             raise ValueError(
                 f"branch {name!r} already exists (drop_branch first "
-                "to re-fork it)") from None
+                "to re-fork it)")
         self.fs.write_atomic(posixpath.join(bdir, "CURRENT"),
                              "snapshot-000000.json")
         return fork
@@ -705,6 +778,14 @@ class SnapshotTable:
                 psch = parent.get("metrics", {}).get("scheme")
                 if psch:
                     m["scheme"] = psch
+            # cumulative chain fields are derived HERE, against the
+            # parent this attempt lands on, so a commit that lost a race
+            # and rebased still carries exact totals; callers that
+            # re-anchor the chain (compact, purge, resalt) pass theirs
+            adds_data = any(ps for k, ps in new_groups.items()
+                            if not is_delete_group(k))
+            for k, v in _chain_metrics(parent, m, adds_data).items():
+                m.setdefault(k, v)
             snap = {
                 "snapshot_id": sid,
                 "parent_id": parent["snapshot_id"] if parent else None,
